@@ -11,7 +11,7 @@ Spark-first design notes
   pickle-over-ZeroMQ worker transport
   (/root/reference/deepdoctection/dataflow/parallel_map.py:337-444).
 - The stage is NARROW: no shuffle. Spans never cross a turn, so every turn is
-  independent; Catalyst keeps the parquet scan → mapInPandas pipeline in one
+  independent; Catalyst keeps the parquet scan → mapInArrow pipeline in one
   stage, and input partitioning is preserved.
 - Row-level error quarantine: a failing turn yields an ``error`` string and
   empty outputs instead of failing the task — the reference's
@@ -37,6 +37,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from deepdoctection_spark.config import DEFAULT_CONFIG, PipelineConfig
 from deepdoctection_spark.kernels.extract import extract_turn, finalize_turn
@@ -93,58 +94,13 @@ EXTRACTION_SCHEMA = T.StructType(
 )
 
 
-# pyarrow mirror of EXTRACTION_SCHEMA. The stage runs as mapInArrow and
-# builds RecordBatches with pyarrow's C conversion path directly: PySpark's
-# generic pandas→Arrow converter walks nested structs element-by-element in
-# Python (≈20× the cost of the extraction kernel itself, measured at sf0.1);
-# pa.array(list-of-dicts, type=...) does the same job in C.
-_PA_SPAN = pa.struct(
-    [
-        ("span_id", pa.string()),
-        ("category", pa.string()),
-        ("span_begin", pa.int32()),
-        ("span_end", pa.int32()),
-        ("reading_order", pa.int32()),
-        ("parent_id", pa.string()),
-        ("score", pa.float32()),
-    ]
+# Streaming twin: the event-time column rides through the Arrow stage as
+# int64 micros (restored to a timestamp JVM-side).
+_TS_SCHEMA = T.StructType(
+    EXTRACTION_SCHEMA.fields + [T.StructField("ts_us", T.LongType())]
 )
-_PA_CELL = pa.struct(
-    [
-        ("span_id", pa.string()),
-        ("span_begin", pa.int32()),
-        ("span_end", pa.int32()),
-        ("row_number", pa.int32()),
-        ("column_number", pa.int32()),
-        ("row_span", pa.int32()),
-        ("column_span", pa.int32()),
-        ("parent_id", pa.string()),
-        ("cell_text", pa.string()),
-    ]
-)
-_PA_WORD = pa.struct(
-    [
-        ("token", pa.string()),
-        ("span_begin", pa.int32()),
-        ("span_end", pa.int32()),
-        ("word_idx", pa.int32()),
-    ]
-)
-_PA_SCHEMA = pa.schema(
-    [
-        ("conv_id", pa.string()),
-        ("turn_idx", pa.int32()),
-        ("role", pa.string()),
-        ("tool", pa.string()),
-        ("extracted_text", pa.string()),
-        ("n_blocks", pa.int32()),
-        ("blocks", pa.list_(_PA_SPAN)),
-        ("cells", pa.list_(_PA_CELL)),
-        ("words", pa.list_(_PA_WORD)),
-        ("table_html", pa.string()),
-        ("error", pa.string()),
-    ]
-)
+
+_WORD_FIELDS = list(to_arrow_schema(_WORD_STRUCT))
 
 
 def _batch_words(out_text: list[str]) -> pa.ListArray:
@@ -182,19 +138,25 @@ def _batch_words(out_text: list[str]) -> pa.ListArray:
             pa.array((begin[nonempty] + lens[nonempty]).astype(np.int32), pa.int32()),
             pa.array(word_idx[nonempty].astype(np.int32), pa.int32()),
         ],
-        fields=list(_PA_WORD),
+        fields=_WORD_FIELDS,
     )
     w_offsets = nzcs[offs].astype(np.int32)  # words-per-row prefix sums
     return pa.ListArray.from_arrays(pa.array(w_offsets, pa.int32()), struct)
 
 
 def _extract_batches(
-    cfg: PipelineConfig, with_words: bool, keep_ts: bool = False
+    cfg: PipelineConfig, with_words: bool, schema: T.StructType
 ) -> "callable":
     ld, gap, td = cfg.link_density_threshold, cfg.column_gap, cfg.tag_density_threshold
-    schema = (
-        _PA_SCHEMA.append(pa.field("ts_us", pa.int64())) if keep_ts else _PA_SCHEMA
-    )
+    keep_ts = "ts_us" in schema.names
+    # The stage runs as mapInArrow and builds RecordBatches with pyarrow's C
+    # conversion path directly: PySpark's generic pandas→Arrow converter
+    # walks nested structs element-by-element in Python (≈20× the cost of
+    # the extraction kernel itself, measured at sf0.1); pa.array(list-of-
+    # tuples, type=...) does the same job in C.
+    pa_schema = to_arrow_schema(schema)
+    blocks_type = pa_schema.field("blocks").type
+    cells_type = pa_schema.field("cells").type
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in batches:
@@ -237,30 +199,20 @@ def _extract_batches(
                                         with_words=False)
                     out_text[i] = fin.extracted_text
                     out_nb[i] = len(fin.blocks)
+                    # structs as tuples in schema field order
                     out_blocks[i] = [
-                        {
-                            "span_id": s.span_id,
-                            "category": s.category,
-                            "span_begin": s.begin,
-                            "span_end": s.end,
-                            "reading_order": s.reading_order,
-                            "parent_id": s.parent_id,
-                            "score": s.score,
-                        }
+                        (s.span_id, s.category, s.begin, s.end,
+                         s.reading_order, s.parent_id, s.score)
                         for s in fin.blocks
                     ]
                     out_cells[i] = [
-                        {
-                            "span_id": s.span_id,
-                            "span_begin": s.begin,
-                            "span_end": s.end,
-                            "row_number": int(s.attrs["row_number"]),
-                            "column_number": int(s.attrs["column_number"]),
-                            "row_span": int(s.attrs["row_span"]),
-                            "column_span": int(s.attrs["column_span"]),
-                            "parent_id": s.parent_id,
-                            "cell_text": out_text[i][s.begin : s.end],
-                        }
+                        (s.span_id, s.begin, s.end,
+                         int(s.attrs["row_number"]),
+                         int(s.attrs["column_number"]),
+                         int(s.attrs["row_span"]),
+                         int(s.attrs["column_span"]),
+                         s.parent_id,
+                         out_text[i][s.begin : s.end])
                         for s in fin.cells
                     ]
                     # every table's HTML, in block order (a turn can carry
@@ -285,8 +237,8 @@ def _extract_batches(
                 words_arr = pa.ListArray.from_arrays(
                     pa.array(np.zeros(n + 1, np.int32), pa.int32()),
                     pa.StructArray.from_arrays(
-                        [pa.array([], f.type) for f in _PA_WORD],
-                        fields=list(_PA_WORD),
+                        [pa.array([], f.type) for f in _WORD_FIELDS],
+                        fields=_WORD_FIELDS,
                     ),
                 )
             arrays = [
@@ -296,15 +248,15 @@ def _extract_batches(
                 tools_arr,
                 pa.array(out_text, pa.string()),
                 pa.array(out_nb, pa.int32()),
-                pa.array(out_blocks, pa.list_(_PA_SPAN)),
-                pa.array(out_cells, pa.list_(_PA_CELL)),
+                pa.array(out_blocks, blocks_type),
+                pa.array(out_cells, cells_type),
                 words_arr,
                 pa.array(out_html, pa.string()),
                 pa.array(out_err, pa.string()),
             ]
             if keep_ts:
                 arrays.append(rb.column(rb.schema.get_field_index("ts_us")))
-            yield pa.RecordBatch.from_arrays(arrays, schema=schema)
+            yield pa.RecordBatch.from_arrays(arrays, schema=pa_schema)
 
     return fn
 
@@ -329,14 +281,8 @@ def extract_transcripts(
     sel = transcripts.select(*cols) if not keep_ts else transcripts.select(
         *cols, F.unix_micros("ts").alias("ts_us")
     )
-    schema = (
-        EXTRACTION_SCHEMA
-        if not keep_ts
-        else T.StructType(
-            EXTRACTION_SCHEMA.fields + [T.StructField("ts_us", T.LongType())]
-        )
-    )
-    out = sel.mapInArrow(_extract_batches(cfg, with_words, keep_ts), schema=schema)
+    schema = _TS_SCHEMA if keep_ts else EXTRACTION_SCHEMA
+    out = sel.mapInArrow(_extract_batches(cfg, with_words, schema), schema=schema)
     if keep_ts:
         out = out.withColumn("ts", F.timestamp_micros("ts_us")).drop("ts_us")
     return out

@@ -22,7 +22,6 @@ batch; per-turn work is a handful of numpy ops over ≤ ~24 intervals.
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
 
 import numpy as np
 import pyarrow as pa
@@ -36,7 +35,7 @@ from deepdoctection_spark.kernels.noisy import (
     candidate_proposals,
     probe_children,
 )
-from deepdoctection_spark.operators.quarantine import row_guard
+from deepdoctection_spark.operators.quarantine import guarded_map_rows
 
 _CAND_SCHEMA = pa.schema(
     [
@@ -85,125 +84,59 @@ def _turn_candidates(blocks: list[dict]) -> list[tuple[int, int, int, int, float
     return out
 
 
-def _select_turn_cols(extracted: DataFrame) -> DataFrame:
-    return extracted.select("conv_id", "turn_idx", "blocks")
+def _turn_nms(blocks: list[dict]) -> tuple[list, list[int]]:
+    """A turn's proposals and the indices greedy NMS keeps among them."""
+    cands = _turn_candidates(blocks)
+    if not cands:
+        return cands, []
+    spans = np.array([[c[2], c[3]] for c in cands], dtype=np.float64)
+    scores = np.array([c[4] for c in cands], dtype=np.float64)
+    return cands, nms_spans(spans, scores, NMS_IOU_THRESHOLD)
+
+
+_TURN_COLS = ["conv_id", "turn_idx", "blocks"]
 
 
 def noisy_candidates(extracted: DataFrame, counter=None) -> DataFrame:
     """Per proposal: kept/suppressed verdict from the real greedy-NMS kernel."""
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in batches:
-            conv = rb.column(0).to_pylist()
-            tix = rb.column(1).to_pylist()
-            blks = rb.column(2).to_pylist()
-            cols: list[list] = [[] for _ in range(8)]
-            for i in range(rb.num_rows):
-                with row_guard(cols, (conv[i], tix[i]), counter=counter):
-                    cands = _turn_candidates(blks[i])
-                    if not cands:
-                        continue
-                    spans = np.array([[c[2], c[3]] for c in cands], dtype=np.float64)
-                    scores = np.array([c[4] for c in cands], dtype=np.float64)
-                    keep = set(nms_spans(spans, scores, NMS_IOU_THRESHOLD))
-                    for j, (bno, cid, cb, ce, score) in enumerate(cands):
-                        cols[0].append(conv[i])
-                        cols[1].append(tix[i])
-                        cols[2].append(bno)
-                        cols[3].append(cid)
-                        cols[4].append(cb)
-                        cols[5].append(ce)
-                        cols[6].append(score)
-                        cols[7].append(j in keep)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(c, t.type) for c, t in zip(cols, _CAND_SCHEMA)],
-                schema=_CAND_SCHEMA,
-            )
+    def rows(conv_id, turn_idx, blocks):
+        cands, keep = _turn_nms(blocks)
+        keep = set(keep)
+        for j, (bno, cid, cb, ce, score) in enumerate(cands):
+            yield (conv_id, turn_idx, bno, cid, cb, ce, score, j in keep)
 
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("conv_id", T.StringType()),
-            T.StructField("turn_idx", T.IntegerType()),
-            T.StructField("block_no", T.IntegerType()),
-            T.StructField("cand_id", T.IntegerType()),
-            T.StructField("cand_begin", T.IntegerType()),
-            T.StructField("cand_end", T.IntegerType()),
-            T.StructField("score", T.DoubleType()),
-            T.StructField("kept", T.BooleanType()),
-        ]
-    )
-    return _select_turn_cols(extracted).mapInArrow(fn, schema=schema)
+    return guarded_map_rows(extracted, _TURN_COLS, _CAND_SCHEMA, rows, counter)
 
 
 def noisy_assignments(extracted: DataFrame, counter=None) -> DataFrame:
     """Per probe child: argmax-IoA parent among NMS survivors (threshold 0.5,
     max-parent-only) or (-1, -1); best_ioa is the max over all survivors."""
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in batches:
-            conv = rb.column(0).to_pylist()
-            tix = rb.column(1).to_pylist()
-            blks = rb.column(2).to_pylist()
-            cols: list[list] = [[] for _ in range(9)]
-            for i in range(rb.num_rows):
-                with row_guard(cols, (conv[i], tix[i]), counter=counter):
-                    cands = _turn_candidates(blks[i])
-                    if not cands:
-                        continue
-                    spans = np.array([[c[2], c[3]] for c in cands], dtype=np.float64)
-                    scores = np.array([c[4] for c in cands], dtype=np.float64)
-                    keep = nms_spans(spans, scores, NMS_IOU_THRESHOLD)
-                    survivors = [cands[j] for j in sorted(keep)]  # (bno,cid) order
-                    parents = np.array(
-                        [[s[2], s[3]] for s in survivors], dtype=np.float64
-                    )
-                    children: list[tuple[int, int, int, int]] = []
-                    for blk in blks[i]:
-                        for cid, cb, ce in probe_children(
-                            blk["span_begin"], blk["span_end"]
-                        ):
-                            children.append((blk["reading_order"], cid, cb, ce))
-                    children.append((-1, 0, *TURN_PROBE))
-                    carr = np.array([[c[2], c[3]] for c in children], dtype=np.float64)
-                    assigned = dict(
-                        (ci, pi)
-                        for pi, ci in match_children(
-                            parents, carr, MATCH_IOA_THRESHOLD, max_parent_only=True
-                        )
-                    )
-                    m = interval_ioa(parents, carr)
-                    best = m.max(axis=0) if len(parents) else np.zeros(len(children))
-                    for ci, (bno, cid, cb, ce) in enumerate(children):
-                        pi = assigned.get(ci)
-                        cols[0].append(conv[i])
-                        cols[1].append(tix[i])
-                        cols[2].append(bno)
-                        cols[3].append(cid)
-                        cols[4].append(cb)
-                        cols[5].append(ce)
-                        cols[6].append(survivors[pi][0] if pi is not None else -1)
-                        cols[7].append(survivors[pi][1] if pi is not None else -1)
-                        cols[8].append(_round4(float(best[ci])))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(c, t.type) for c, t in zip(cols, _ASSIGN_SCHEMA)],
-                schema=_ASSIGN_SCHEMA,
+    def rows(conv_id, turn_idx, blocks):
+        cands, keep = _turn_nms(blocks)
+        if not cands:
+            return
+        survivors = [cands[j] for j in sorted(keep)]  # (bno,cid) order
+        parents = np.array([[s[2], s[3]] for s in survivors], dtype=np.float64)
+        children: list[tuple[int, int, int, int]] = []
+        for blk in blocks:
+            for cid, cb, ce in probe_children(blk["span_begin"], blk["span_end"]):
+                children.append((blk["reading_order"], cid, cb, ce))
+        children.append((-1, 0, *TURN_PROBE))
+        carr = np.array([[c[2], c[3]] for c in children], dtype=np.float64)
+        assigned = dict(
+            (ci, pi)
+            for pi, ci in match_children(
+                parents, carr, MATCH_IOA_THRESHOLD, max_parent_only=True
             )
+        )
+        m = interval_ioa(parents, carr)
+        best = m.max(axis=0) if len(parents) else np.zeros(len(children))
+        for ci, (bno, cid, cb, ce) in enumerate(children):
+            pi = assigned.get(ci)
+            parent = survivors[pi][:2] if pi is not None else (-1, -1)
+            yield (conv_id, turn_idx, bno, cid, cb, ce, *parent,
+                   _round4(float(best[ci])))
 
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("conv_id", T.StringType()),
-            T.StructField("turn_idx", T.IntegerType()),
-            T.StructField("block_no", T.IntegerType()),
-            T.StructField("child_id", T.IntegerType()),
-            T.StructField("child_begin", T.IntegerType()),
-            T.StructField("child_end", T.IntegerType()),
-            T.StructField("parent_block_no", T.IntegerType()),
-            T.StructField("parent_cand_id", T.IntegerType()),
-            T.StructField("best_ioa", T.DoubleType()),
-        ]
-    )
-    return _select_turn_cols(extracted).mapInArrow(fn, schema=schema)
+    return guarded_map_rows(extracted, _TURN_COLS, _ASSIGN_SCHEMA, rows, counter)

@@ -21,13 +21,11 @@ Geometry per turn (t = turn_idx):
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from deepdoctection_spark.kernels.pubtables import Box, segment_pubtables_grid
-from deepdoctection_spark.operators.quarantine import row_guard
+from deepdoctection_spark.operators.quarantine import guarded_map_rows
 
 _SCHEMA = pa.schema(
     [
@@ -66,43 +64,12 @@ def stripe_geometry(turn_idx: int) -> tuple[list[Box], list[Box], list[Box]]:
 def pubtables_grids(transcripts: DataFrame, counter=None) -> DataFrame:
     """One segmented grid per turn (flat columns, narrow stage)."""
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in batches:
-            conv = rb.column(0).to_pylist()
-            tix = rb.column(1).to_pylist()
-            cols: list[list] = [[] for _ in range(9)]
-            for i in range(rb.num_rows):
-                with row_guard(cols, (conv[i], tix[i]), counter=counter):
-                    t = int(tix[i])
-                    rows_s, cols_s, span_s = stripe_geometry(t)
-                    res = segment_pubtables_grid(rows_s, cols_s, span_s)
-                    cols[0].append(conv[i])
-                    cols[1].append(t)
-                    cols[2].append(res.n_rows)
-                    cols[3].append(res.n_cols)
-                    cols[4].append(len(res.cells))
-                    cols[5].append(res.max_row_span)
-                    cols[6].append(res.max_col_span)
-                    cols[7].append(res.html)
-                    cols[8].append(res.n_unmatched)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(c, t.type) for c, t in zip(cols, _SCHEMA)],
-                schema=_SCHEMA,
-            )
+    def rows(conv_id: str, turn_idx: int):
+        t = int(turn_idx)
+        res = segment_pubtables_grid(*stripe_geometry(t))
+        yield (conv_id, t, res.n_rows, res.n_cols, len(res.cells),
+               res.max_row_span, res.max_col_span, res.html, res.n_unmatched)
 
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("conv_id", T.StringType()),
-            T.StructField("turn_idx", T.IntegerType()),
-            T.StructField("n_rows", T.IntegerType()),
-            T.StructField("n_cols", T.IntegerType()),
-            T.StructField("n_cells", T.IntegerType()),
-            T.StructField("max_row_span", T.IntegerType()),
-            T.StructField("max_col_span", T.IntegerType()),
-            T.StructField("table_html", T.StringType()),
-            T.StructField("n_unmatched", T.IntegerType()),
-        ]
+    return guarded_map_rows(
+        transcripts, ["conv_id", "turn_idx"], _SCHEMA, rows, counter
     )
-    return transcripts.select("conv_id", "turn_idx").mapInArrow(fn, schema=schema)

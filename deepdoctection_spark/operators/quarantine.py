@@ -7,12 +7,18 @@ must never fail the task. The extraction stage records failures in an
 pubtables) consume data that is well-formed by construction, so their
 contract is the reference's other mode — log-and-DROP: on any per-row
 failure, roll back the row's partially-appended outputs and continue.
+``guarded_map_rows`` is the one batch loop those stages share.
 """
 
 from __future__ import annotations
 
 import logging
+from collections.abc import Callable, Iterable, Iterator
 from contextlib import contextmanager
+
+import pyarrow as pa
+from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import from_arrow_schema
 
 _log = logging.getLogger(__name__)
 
@@ -43,3 +49,32 @@ def row_guard(cols: list[list], row_key: object = None, counter=None):
         if counter is not None:
             counter.add(1)
         _log.warning("row quarantined (dropped) key=%r: %s", row_key, exc)
+
+
+def guarded_map_rows(
+    df: DataFrame,
+    in_cols: list[str],
+    schema: pa.Schema,
+    rows: Callable[..., Iterable[tuple]],
+    counter=None,
+) -> DataFrame:
+    """One narrow ``mapInArrow`` stage over ``df[in_cols]``: ``rows`` gets
+    each input row's values (in ``in_cols`` order) and yields zero or more
+    output tuples in ``schema`` field order. Each input row runs under
+    ``row_guard``, so a row that raises — even after yielding — contributes
+    nothing, is counted on ``counter`` and is logged by its first two input
+    values (conv_id, turn_idx in every stage that uses this)."""
+
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            cols: list[list] = [[] for _ in schema]
+            for row in zip(*(c.to_pylist() for c in rb.columns)):
+                with row_guard(cols, row[:2], counter=counter):
+                    for out in rows(*row):
+                        for c, v in zip(cols, out, strict=True):
+                            c.append(v)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, f.type) for c, f in zip(cols, schema)], schema=schema
+            )
+
+    return df.select(*in_cols).mapInArrow(fn, schema=from_arrow_schema(schema))

@@ -20,8 +20,6 @@ Variants (variant = turn_idx % 3, SQL-reproducible):
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -32,7 +30,7 @@ from deepdoctection_spark.kernels.refine import (
     refine_cells,
     refined_cells_to_html,
 )
-from deepdoctection_spark.operators.quarantine import row_guard
+from deepdoctection_spark.operators.quarantine import guarded_map_rows
 
 _SCHEMA = pa.schema(
     [
@@ -58,48 +56,30 @@ def _proposals(cells: list[dict], variant: int) -> list[ProposedCell]:
     return out
 
 
+def _refined(extracted: DataFrame, schema: pa.Schema, rows, counter) -> DataFrame:
+    """Shared shape of the refinement stages: table-bearing turns only,
+    ``rows(conv_id, turn_idx, variant, refined_cells)`` per turn."""
+
+    def per_turn(conv_id, turn_idx, cells):
+        variant = int(turn_idx) % 3
+        yield from rows(conv_id, turn_idx, variant,
+                        refine_cells(_proposals(cells, variant)))
+
+    return guarded_map_rows(
+        extracted.where(F.size("cells") > 0),
+        ["conv_id", "turn_idx", "cells"], schema, per_turn, counter,
+    )
+
+
 def refined_tables(extracted: DataFrame, counter=None) -> DataFrame:
     """Per table-bearing turn: refined cell count + merged-cell HTML."""
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in batches:
-            conv = rb.column(0).to_pylist()
-            tix = rb.column(1).to_pylist()
-            cells = rb.column(2).to_pylist()
-            cols: list[list] = [[] for _ in range(5)]
-            for i in range(rb.num_rows):
-                with row_guard(cols, (conv[i], tix[i]), counter=counter):
-                    if not cells[i]:
-                        continue
-                    variant = int(tix[i]) % 3
-                    refined = refine_cells(_proposals(cells[i], variant))
-                    n_rows = max(c.row_number + c.row_span - 1 for c in refined)
-                    cols[0].append(conv[i])
-                    cols[1].append(tix[i])
-                    cols[2].append(variant)
-                    cols[3].append(len(refined))
-                    cols[4].append(refined_cells_to_html(refined, n_rows))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(c, t.type) for c, t in zip(cols, _SCHEMA)],
-                schema=_SCHEMA,
-            )
+    def rows(conv_id, turn_idx, variant, refined):
+        n_rows = max(c.row_number + c.row_span - 1 for c in refined)
+        yield (conv_id, turn_idx, variant, len(refined),
+               refined_cells_to_html(refined, n_rows))
 
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("conv_id", T.StringType()),
-            T.StructField("turn_idx", T.IntegerType()),
-            T.StructField("variant", T.IntegerType()),
-            T.StructField("n_cells", T.IntegerType()),
-            T.StructField("refined_html", T.StringType()),
-        ]
-    )
-    return (
-        extracted.where(F.size("cells") > 0)
-        .select("conv_id", "turn_idx", "cells")
-        .mapInArrow(fn, schema=schema)
-    )
+    return _refined(extracted, _SCHEMA, rows, counter)
 
 
 _CSV_SCHEMA = pa.schema(
@@ -117,44 +97,10 @@ def refined_csv_rows(extracted: DataFrame, counter=None) -> DataFrame:
     """Table.csv export (view.py:332-344) over the refined cells: one output
     row per table row, tab-joined tiles, spanned tiles blank."""
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in batches:
-            conv = rb.column(0).to_pylist()
-            tix = rb.column(1).to_pylist()
-            cells = rb.column(2).to_pylist()
-            cols: list[list] = [[] for _ in range(5)]
-            for i in range(rb.num_rows):
-                with row_guard(cols, (conv[i], tix[i]), counter=counter):
-                    if not cells[i]:
-                        continue
-                    variant = int(tix[i]) % 3
-                    refined = refine_cells(_proposals(cells[i], variant))
-                    n_rows = max(c.row_number + c.row_span - 1 for c in refined)
-                    n_cols = max(c.column_number + c.column_span - 1 for c in refined)
-                    for r, row in enumerate(cells_to_csv(refined, n_rows, n_cols), 1):
-                        cols[0].append(conv[i])
-                        cols[1].append(tix[i])
-                        cols[2].append(variant)
-                        cols[3].append(r)
-                        cols[4].append(row)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(c, t.type) for c, t in zip(cols, _CSV_SCHEMA)],
-                schema=_CSV_SCHEMA,
-            )
+    def rows(conv_id, turn_idx, variant, refined):
+        n_rows = max(c.row_number + c.row_span - 1 for c in refined)
+        n_cols = max(c.column_number + c.column_span - 1 for c in refined)
+        for r, row in enumerate(cells_to_csv(refined, n_rows, n_cols), 1):
+            yield (conv_id, turn_idx, variant, r, row)
 
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("conv_id", T.StringType()),
-            T.StructField("turn_idx", T.IntegerType()),
-            T.StructField("variant", T.IntegerType()),
-            T.StructField("row_number", T.IntegerType()),
-            T.StructField("csv_row", T.StringType()),
-        ]
-    )
-    return (
-        extracted.where(F.size("cells") > 0)
-        .select("conv_id", "turn_idx", "cells")
-        .mapInArrow(fn, schema=schema)
-    )
+    return _refined(extracted, _CSV_SCHEMA, rows, counter)

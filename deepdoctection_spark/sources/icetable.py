@@ -2058,26 +2058,31 @@ class IceTable:
         wanted = set(paths)
         if not wanted:
             return self.snapshot()
-        carried_refs: list[dict] = []
+        # carried: a ref kept as-is, or the survivor entries of a manifest
+        # that loses some files — written only after the plan validates, so
+        # a stale plan leaves no orphan manifest behind
+        carried: list[dict | list[dict]] = []
         candidates: list[dict] = []
         n_carried = 0
         for ref in refs:
             entries = self._load_manifest(ref["path"])
             cand = [e for e in entries if e["path"] in wanted]
             if not cand:
-                carried_refs.append(ref)
+                carried.append(ref)
                 n_carried += ref["n_files"]
                 continue
             candidates.extend(cand)
             survivors = [e for e in entries if e["path"] not in wanted]
             n_carried += len(survivors)
             if survivors:
-                carried_refs.append(self._write_manifest(survivors))
+                carried.append(survivors)
         missing = wanted - {e["path"] for e in candidates}
         if missing:
             raise ValueError(
                 f"rewrite_files: {sorted(missing)} not in the current "
                 "snapshot — re-plan against HEAD")
+        carried_refs = [self._write_manifest(c) if isinstance(c, list) else c
+                        for c in carried]
         spec = prev.get("partition_by")
         df = self._read_with_deletes(
             spark, prev["schema"], candidates, prev).coalesce(target_files)

@@ -33,6 +33,9 @@ def test_config_overwrite_validated():
     assert an.cfg.link_density_threshold == 0.7
     with pytest.raises(ValueError, match="unknown config keys"):
         get_analyzer(config_overwrite={"nope": 1})
+    # a retired field is unknown too, not silently accepted
+    with pytest.raises(ValueError, match="unknown config keys"):
+        get_analyzer(config_overwrite={"shingle_k": 5})
     with pytest.raises(ValueError, match="link_density_threshold"):
         get_analyzer(config_overwrite={"link_density_threshold": 3.0})
 

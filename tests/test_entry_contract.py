@@ -3,6 +3,9 @@ with an oracle must match DuckDB on sf0.01 (rowcount + columns + values)."""
 
 from __future__ import annotations
 
+import json
+from pathlib import Path
+
 import pytest
 
 import __spark_entry__ as entry_mod
@@ -20,6 +23,31 @@ def test_entry_smoke(spark):
 
 def test_every_oracle_has_query():
     assert set(ORACLES) <= set(QUERIES)
+
+
+def _artifact_rounds(repo: Path) -> dict[str, int]:
+    last: dict[str, int] = {}
+    for p in repo.glob("CORRECTNESS_r[0-9]*.json"):
+        rnd = int(p.stem.split("_r")[-1])
+        for name in json.loads(p.read_text()):
+            last[name] = max(rnd, last.get(name, 0))
+    return last
+
+
+def test_sweep_order_follows_correctness_artifacts():
+    """Queries in no driver CORRECTNESS artifact lead the sweep; after them
+    the last-checked round never decreases."""
+    last = _artifact_rounds(Path(entry_mod.__file__).resolve().parent)
+    rounds = [last.get(n, 0) for n in QUERIES]
+    assert rounds == sorted(rounds)
+    assert set(QUERIES) == set(entry_mod.QUERIES)
+
+
+def test_sweep_order_without_artifacts_is_registration_order(
+    tmp_path, monkeypatch
+):
+    monkeypatch.setattr(entry_mod, "_REPO", tmp_path)
+    assert list(entry_mod.queries()) == list(entry_mod.QUERIES)
 
 
 @pytest.mark.parametrize("name", sorted(ORACLES))

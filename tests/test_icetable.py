@@ -1375,6 +1375,16 @@ def test_rewrite_files_unknown_path_raises(spark, tbl):
     tbl.append(_df(spark, 0, 10).coalesce(1))
     with pytest.raises(ValueError, match="re-plan"):
         tbl.rewrite_files(spark, ["nope.parquet"])
+    # a stale plan naming one real file of a multi-file manifest must fail
+    # before writing that manifest's survivors: no orphan manifest file
+    tbl.append(_df(spark, 10, 40).repartition(2))
+    second = [f["path"] for f in tbl.snapshot()["files"]
+              if f["stats"]["id"]["min"] >= 10]
+    assert len(second) == 2
+    listing = sorted(os.listdir(tbl.meta_dir))
+    with pytest.raises(ValueError, match="re-plan"):
+        tbl.rewrite_files(spark, [second[0], "nope.parquet"])
+    assert sorted(os.listdir(tbl.meta_dir)) == listing
 
 
 def test_history_tracks_every_commit_kind(spark, tbl):

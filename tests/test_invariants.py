@@ -279,6 +279,33 @@ def test_row_guard_counter_counts_drops(spark):
     assert counter.value == 2  # ...and counted
 
 
+def test_guarded_map_rows_rolls_back_mid_row_failure(spark):
+    """A row that raises AFTER yielding outputs contributes none of them:
+    its partial output is rolled back, its neighbours in the same batch
+    survive, and exactly one drop is counted."""
+    import pyarrow as pa
+
+    from deepdoctection_spark.operators.quarantine import (
+        guarded_map_rows,
+        quarantine_counter,
+    )
+
+    def rows(conv_id, n):
+        for k in range(n):
+            yield (conv_id, k)
+        if conv_id == "bad":
+            raise RuntimeError("fails after yielding")
+
+    df = spark.createDataFrame(
+        [("a", 2), ("bad", 3), ("b", 1)], "conv_id string, n int"
+    ).coalesce(1)  # one batch: the bad row sits between good ones
+    schema = pa.schema([("conv_id", pa.string()), ("k", pa.int32())])
+    counter = quarantine_counter(spark)
+    out = guarded_map_rows(df, ["conv_id", "n"], schema, rows, counter).collect()
+    assert sorted(map(tuple, out)) == [("a", 0), ("a", 1), ("b", 0)]
+    assert counter.value == 1
+
+
 def test_extraction_over_icetable_is_narrow(spark, sf_small, tmp_path):
     """The north-rule input shape: extraction over an Iceberg-semantics
     snapshot read must stay shuffle-free too — the multi-file manifest read
