@@ -36,6 +36,16 @@ def get_spark(
     submit-provided master wins (scripts/extract_job.py does). AQE is on so
     the reassembly shuffle coalesces and skew-splits at runtime
     (mega-conversation handling).
+
+    Python workers are forked by the package's daemon module
+    (``deepdoctection_spark.workerd``), not ``pyspark.daemon``: up to
+    CPython 3.12 a reused worker otherwise re-reads the whole directory of
+    ``pyspark.zip`` once per imported pyspark package before every task;
+    the daemon keeps one directory per unchanged archive. On CPython >= 3.13
+    it changes nothing. On a cluster the package must therefore be
+    importable when the executors start their Python daemon: ship it with
+    ``--py-files`` or install it on the executors, as
+    scripts/extract_job.py already assumes.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master == _ENV_MASTER:
@@ -59,6 +69,7 @@ def get_spark(
         )
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "deepdoctection_spark.workerd")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

@@ -2896,7 +2896,8 @@ ranked AS (
   FROM documents
 )
 SELECT r.source, r.doc_id, r.k,
-       ((2 * r.k - 1) * 1000000000 // (2 * w.weight_q6))::BIGINT AS key_q3
+       ((2 * r.k - 1) * 1000000000
+        // (2 * greatest(w.weight_q6, 1)))::BIGINT AS key_q3
 FROM ranked r JOIN wts w USING (source)
 """,
 )

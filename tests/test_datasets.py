@@ -855,6 +855,37 @@ def test_stride_schedule_deterministic_across_partitioning(spark):
     assert a == b
 
 
+def test_zero_weight_source_schedules_alike_on_both_engines(spark, tmp_path):
+    """A source with no tokens gets weight_q6 = 0; its stride keys are the
+    weight-1 keys on Spark and on the DuckDB oracle, never NULL."""
+    import duckdb
+    import pandas as pd
+
+    import deepdoctection_spark.plans.training_ops  # noqa: F401 — registers
+    from deepdoctection_spark.plans.registry import ORACLES, QUERIES
+
+    texts = [("web", "alpha beta gamma delta"), ("books", "one two three"),
+             ("empty", ""), ("empty", "   ")]
+    pd.DataFrame({
+        "doc_id": list(range(4 * len(texts))),
+        "text": [t for _, t in texts] * 4,
+        "lang": "en",
+        "source": [s for s, _ in texts] * 4,
+        "n_chars": [len(t) for _, t in texts] * 4,
+    }).to_parquet(tmp_path / "documents.parquet", index=False)
+
+    name = "loader_mixture_schedule"
+    got = sorted(map(tuple, QUERIES[name](spark, str(tmp_path)).collect()))
+    con = duckdb.connect()
+    con.execute("CREATE VIEW documents AS SELECT * FROM read_parquet("
+                f"'{tmp_path / 'documents.parquet'}')")
+    want = sorted(con.execute(ORACLES[name]).fetchall())
+    assert got == want
+    empty = [r for r in got if r[0] == "empty"]
+    assert [r[3] for r in sorted(empty, key=lambda r: r[2])] == [
+        (2 * k - 1) * 10**9 // 2 for k in range(1, 9)]
+
+
 def test_markdown_extract_semantics(spark):
     from deepdoctection_spark.operators.textstats import markdown_extract
 
